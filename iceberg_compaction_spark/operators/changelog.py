@@ -179,9 +179,7 @@ def changelog_scan(
                     )
                     for keys, grp in _group_eq(added_eq):
                         eq_df = scan_mod.read_equality_deletes(
-                            spark,
-                            [(r["path"], r["sequence_number"]) for r in grp],
-                            list(keys),
+                            spark, grp, list(keys), table.physical_schema()
                         )
                         key_df = eq_df.select(*keys).distinct()
                         # every live parent row has seq < the new delete's
@@ -236,9 +234,7 @@ def changelog_scan(
                     )
                     for keys, grp in _group_eq(removed_eq):
                         eq_df = scan_mod.read_equality_deletes(
-                            spark,
-                            [(r["path"], r["sequence_number"]) for r in grp],
-                            list(keys),
+                            spark, grp, list(keys), table.physical_schema()
                         ).withColumnRenamed(SEQ_COL, "_del_seq")
                         resurrected.append(
                             cur_scan.join(

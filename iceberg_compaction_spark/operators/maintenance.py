@@ -381,9 +381,7 @@ def rewrite_equality_deletes(spark: SparkSession, table: Table) -> int:
             removed += [r["path"] for r in dead]  # lone live file stays as-is
             continue
         removed += [r["path"] for r in rows]
-        df = scan_mod.read_equality_deletes(
-            spark, [(r["path"], r["sequence_number"]) for r in live], list(keys)
-        )
+        df = scan_mod.read_equality_deletes(spark, live, list(keys), table.physical_schema())
         consolidated = (
             df.groupBy(*keys)
             .agg(F.max(SEQ_COL).alias(SEQ_COL))

@@ -376,7 +376,7 @@ class CompactionRunner:
                 by_keys.setdefault(tuple(r["equality_ids"]), []).append(r)
             for keys, grp in sorted(by_keys.items()):
                 eq_df = scan_mod.read_equality_deletes(
-                    self.spark, [(r["path"], r["sequence_number"]) for r in grp], list(keys)
+                    self.spark, grp, list(keys), self.table.physical_schema()
                 )
                 small = (
                     sum(r["size_bytes"] for r in grp) < self.config.inline_delete_threshold_bytes
@@ -407,7 +407,6 @@ class CompactionRunner:
     ) -> dict:
         cfg = self.config
         t0 = time.time()
-        need_eq = bool(seq_by_path)
         pos_df, bpos, eq_groups = self._delete_frames(snapshot_id, b.paths)
         # epoch-aware read: rewrites migrate pre-rename files' physical
         # column names to the current schema
@@ -416,7 +415,7 @@ class CompactionRunner:
             [{"path": p, "sequence_number": seq_by_path[p]} for p in b.paths],
             with_file=pos_df is not None,
             with_pos=pos_df is not None,
-            seq_by_path=seq_by_path if eq_groups else None,
+            with_seq=bool(eq_groups),
         )
         df = apply_deletes(df, pos_df, None, broadcast_pos=bpos)
         for keys, eq_df, small in eq_groups:
@@ -628,7 +627,6 @@ class CompactionRunner:
             return res
 
         man = self.table.manifest(sid)
-        eq_present = any(r["content"] == mf.CONTENT_EQ_DEL for r in man)
         seq_all = {r["path"]: r["sequence_number"] for r in man if r["content"] == mf.CONTENT_DATA}
 
         pending = [b for b in bins if b.bin not in done]
@@ -636,8 +634,8 @@ class CompactionRunner:
 
         def run_bin(b: BinPlan) -> dict:
             # per-file seqs always flow (the epoch-aware read needs
-            # them); the eq-delete join only consumes them when
-            # equality deletes exist
+            # them); ``_seq`` is attached only when equality deletes
+            # apply to the bin
             seqs = {p: seq_all[p] for p in b.paths}
             return self._rewrite_bin(run_id, sid, b, seqs, commit_each=worker_mode)
 

@@ -561,13 +561,14 @@ class Table:
         rows: Sequence[dict],
         with_file: bool = False,
         with_pos: bool = False,
-        seq_by_path: dict | None = None,
+        with_seq: bool = False,
     ) -> DataFrame:
         """Epoch-aware data read over manifest ``rows``: files are
         grouped by their historic column names (one extra read per
         rename epoch actually present — zero-cost when the table was
         never renamed) and every group is normalized to CURRENT names
-        before the union."""
+        before the union. ``with_seq`` adds each row's file sequence
+        number (the rows' ``sequence_number``) as ``_seq``."""
         phys = self.physical_schema()
         groups: dict[tuple, list] = {}
         for r in rows:
@@ -595,19 +596,15 @@ class Table:
                     for f in phys.fields
                 ]
             )
-            paths = [r["path"] for r in grp]
-            sub_seq = (
-                {p: seq_by_path[p] for p in paths if p in seq_by_path}
-                if seq_by_path is not None
-                else None
-            )
             df = scan_mod.read_data_files(
                 spark,
-                paths,
+                [r["path"] for r in grp],
                 schema=hist,
                 with_file=with_file,
                 with_pos=with_pos,
-                seq_by_path=sub_seq,
+                seq_by_path={r["path"]: r["sequence_number"] for r in grp}
+                if with_seq
+                else None,
             )
             if names or types or defaults:
                 # one simultaneous projection — sequential renames would
@@ -1552,9 +1549,7 @@ class Table:
             data_rows,
             with_file=with_hidden or need_pos,
             with_pos=with_hidden or need_pos,
-            seq_by_path={r["path"]: r["sequence_number"] for r in data_rows}
-            if (need_eq or with_hidden)
-            else None,
+            with_seq=need_eq or with_hidden,
         )
         if filter:
             # residual predicate: full filter on surviving files (file
@@ -1582,7 +1577,7 @@ class Table:
             )
             for keys, grp in sorted(by_keys.items()):
                 eq_df = scan_mod.read_equality_deletes(
-                    spark, [(r["path"], r["sequence_number"]) for r in grp], list(keys)
+                    spark, grp, list(keys), self.physical_schema()
                 )
                 small = sum(r["size_bytes"] for r in grp) < inline_delete_threshold
                 out = apply_deletes(out, None, eq_df, eq_keys=keys, broadcast_eq=small)
