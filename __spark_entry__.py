@@ -84,7 +84,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_filter": QP.q_corpus_filter,
         "delete_counts": Q.q_delete_counts,
         "commit_summary_rollup": Q.q_commit_summary_rollup,
-        "size_histogram": Q.q_size_histogram,
+        "size_histogram": Q.q_size_buckets,
         "group_totals": Q.q_group_totals,
         "parallelism_formula": Q.q_parallelism_formula,
         "transcripts_compaction_roundtrip": QP.q_transcripts_compaction_roundtrip,

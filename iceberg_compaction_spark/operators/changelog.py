@@ -164,15 +164,8 @@ def changelog_scan(
                 # added eq-delete's bounds (and whose seq is older) can
                 # lose rows — a one-partition MERGE's CDC costs one
                 # partition's scan, not the parent table's
-                keys_all = sorted({k for r in added_eq for k in (r["equality_ids"] or [])})
-                target_paths = []
-                for r in par_data:
-                    fb = delete_scope.union_key_bounds([r], keys_all)
-                    if any(
-                        delete_scope.eq_delete_applicable(d, fb, r["sequence_number"])
-                        for d in added_eq
-                    ):
-                        target_paths.append(r["path"])
+                counts = delete_scope.eq_delete_counts(par_data, added_eq)
+                target_paths = [r["path"] for r in par_data if counts[r["path"]]]
                 if target_paths:
                     par_scan = table.scan(
                         spark, snapshot_id=parent, with_hidden=True, paths=target_paths
@@ -217,17 +210,8 @@ def changelog_scan(
                         cur_scan.join(refs, [FILE_COL, POS_COL], "left_semi")
                     )
             if removed_eq:
-                keys_all = sorted(
-                    {k for r in removed_eq for k in (r["equality_ids"] or [])}
-                )
-                target_paths = []
-                for r in cur_data:
-                    fb = delete_scope.union_key_bounds([r], keys_all)
-                    if any(
-                        delete_scope.eq_delete_applicable(d, fb, r["sequence_number"])
-                        for d in removed_eq
-                    ):
-                        target_paths.append(r["path"])
+                counts = delete_scope.eq_delete_counts(cur_data, removed_eq)
+                target_paths = [r["path"] for r in cur_data if counts[r["path"]]]
                 if target_paths:
                     cur_scan = table.scan(
                         spark, snapshot_id=sid, with_hidden=True, paths=target_paths

@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_compaction_spark.operators.mor import FILE_COL, POS_COL
+from iceberg_compaction_spark.plans import pruning
 from iceberg_compaction_spark.sources import manifest as mf
 from iceberg_compaction_spark.sources.table import Table
 
@@ -55,19 +56,9 @@ def delete_where(
     if mode not in ("mor", "cow"):
         raise ValueError("mode must be 'mor' or 'cow'")
     data_rows = table.files(content=mf.CONTENT_DATA)
-    # three-way split via the shared classifier (driver loop small,
-    # Arrow-vectorized over files_df above the threshold)
-    from iceberg_compaction_spark.plans.pruning_df import classify_data_rows
-
-    verdicts = classify_data_rows(
-        spark,
-        data_rows,
-        predicate,
-        table.column_type_categories(),
-        files_df_factory=lambda: table.files_df(spark).filter(
-            F.col("content") == mf.CONTENT_DATA
-        ),
-        threshold=Table.PRUNE_DF_THRESHOLD,
+    # three-way split via the shared classifier
+    verdicts = pruning.classify_data_rows(
+        data_rows, predicate, table.column_type_categories()
     )
     full_drop: list[str] = []
     candidates: list[dict] = []

@@ -607,86 +607,3 @@ def rewrite_manifests(table: Table) -> int:
         removed_paths=[r["path"] for r in rows],
         force_base=True,
     )
-
-
-def orphan_files_df(spark: SparkSession, table: Table, older_than_ms: int | None = None):
-    """Distributed manifest-vs-listing anti-join — the Iceberg
-    ``remove_orphan_files`` action shape, for tables whose file count
-    outgrows a driver-side set (the round-6 close of the last
-    O(|files|)-through-the-driver maintenance path; cf. the
-    ``orphan_files_antijoin`` oracle query, which proves the relational
-    shape on TPC-H data).
-
-    Listing: first-level prefixes under data/ and deletes/ (one per
-    write operation — commit-bounded, NOT file-bounded) fan out to a
-    ``mapInPandas`` stage that walks each prefix executor-side. Live
-    set: the union of every retained snapshot's ``files_df`` (manifest
-    parquets read executor-side) — never a Python set. Returns a
-    DataFrame of (path, mtime_ms) for unreferenced parquet files older
-    than the cutoff; bloom sidecars stay with the driver-side sweep
-    (``meta/blooms`` is descriptor-sized, not data-sized)."""
-    import pandas as _pd
-    from pyspark.sql import functions as _F
-
-    cutoff = older_than_ms if older_than_ms is not None else int(time.time() * 1000) + 1
-    prefixes = []
-    for root in (table.data_dir, table.deletes_dir):
-        # files directly under root list with the root itself (depth 0)
-        prefixes.append((root, False))
-        for name in sorted(os.listdir(root)):
-            p = os.path.join(root, name)
-            if os.path.isdir(p):
-                prefixes.append((p, True))
-    # one row per write-operation directory: commit-bounded metadata
-    pref_df = spark.createDataFrame(prefixes, "prefix string, recurse boolean")
-
-    def _list(batches):
-        for pdf in batches:
-            rows = []
-            for prefix, recurse in zip(pdf["prefix"], pdf["recurse"]):
-                if recurse:
-                    paths = mf.list_parquet_files(prefix)
-                else:
-                    paths = sorted(
-                        os.path.join(prefix, f)
-                        for f in os.listdir(prefix)
-                        if f.endswith(".parquet")
-                        and os.path.isfile(os.path.join(prefix, f))
-                    )
-                for p in paths:
-                    rows.append((p, int(os.path.getmtime(p) * 1000)))
-            yield _pd.DataFrame(rows, columns=["path", "mtime_ms"])
-
-    listing = pref_df.mapInPandas(_list, "path string, mtime_ms long")
-
-    live = None
-    for s in table.snapshots():
-        part = table.files_df(spark, s["snapshot_id"]).select("path")
-        live = part if live is None else live.unionByName(part)
-    if live is None:
-        return listing.filter(_F.col("mtime_ms") < cutoff)
-    return (
-        listing.filter(_F.col("mtime_ms") < cutoff)
-        .join(live.distinct(), on="path", how="left_anti")
-    )
-
-
-def clean_orphan_files_distributed(
-    spark: SparkSession,
-    table: Table,
-    older_than_ms: int | None = None,
-    dry_run: bool = False,
-) -> list[str]:
-    """``clean_orphan_files`` with the listing and live-set anti-join
-    executed as a Spark plan (``orphan_files_df``). The orphan set
-    itself is what comes back to the driver — O(orphans), not
-    O(files); at cluster scale the unlink would ride a
-    ``foreachPartition``, which for this local-FS format is the same
-    syscall either way. Results match ``clean_orphan_files`` for the
-    parquet population (sidecar sweep stays with the driver variant)."""
-    orphans = sorted(r["path"] for r in orphan_files_df(spark, table, older_than_ms).collect())
-    if not dry_run:
-        for p in orphans:
-            if os.path.exists(p):
-                os.unlink(p)
-    return orphans

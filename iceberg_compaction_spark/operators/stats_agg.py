@@ -223,20 +223,10 @@ def fast_count(
             "pruned_files": 0,
         }
 
-    # three-way split (pruned / all-match / straddle), driver loop at
-    # small file counts, Arrow-vectorized over files_df above the
-    # threshold — same scale path as scan pruning
-    from iceberg_compaction_spark.plans.pruning_df import classify_data_rows
-
-    verdicts = classify_data_rows(
-        spark,
-        data_rows,
-        predicate,
-        table.column_type_categories(),
-        files_df_factory=lambda: table.files_df(spark, snapshot_id).filter(
-            F.col("content") == mf.CONTENT_DATA
-        ),
-        threshold=Table.PRUNE_DF_THRESHOLD,
+    # three-way split (pruned / all-match / straddle), the same
+    # evaluator scan pruning uses
+    verdicts = pruning.classify_data_rows(
+        data_rows, predicate, table.column_type_categories()
     )
     meta_count = 0
     meta_files = pruned = 0

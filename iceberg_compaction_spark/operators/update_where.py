@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from iceberg_compaction_spark.errors import ValidationError
 from iceberg_compaction_spark.operators.mor import FILE_COL, POS_COL
+from iceberg_compaction_spark.plans import pruning
 from iceberg_compaction_spark.sources import manifest as mf
 from iceberg_compaction_spark.sources.table import Table
 
@@ -71,19 +72,10 @@ def update_where(
 
     # may-match files only (type-aware bounds + bloom pruning); the
     # full predicate still runs on the scanned rows. Classification is
-    # the shared driver/executor path (plans/pruning_df).
-    from iceberg_compaction_spark.plans.pruning_df import classify_data_rows
-
+    # the shared three-way split (plans/pruning).
     data_rows = table.files(content=mf.CONTENT_DATA)
-    verdicts = classify_data_rows(
-        spark,
-        data_rows,
-        predicate,
-        table.column_type_categories(),
-        files_df_factory=lambda: table.files_df(spark).filter(
-            F.col("content") == mf.CONTENT_DATA
-        ),
-        threshold=Table.PRUNE_DF_THRESHOLD,
+    verdicts = pruning.classify_data_rows(
+        data_rows, predicate, table.column_type_categories()
     )
     candidates = [r["path"] for r in data_rows if verdicts[r["path"]] != "pruned"]
 

@@ -56,9 +56,9 @@ from iceberg_compaction_spark.errors import ValidationError
 from iceberg_compaction_spark.metrics import GLOBAL
 from iceberg_compaction_spark.functions.clustering import CLUSTER_COL, add_cluster_key
 from iceberg_compaction_spark.operators.mor import FILE_COL
-from iceberg_compaction_spark.plans.packer import plan_bins_df
+from iceberg_compaction_spark.plans import delete_scope, pruning
+from iceberg_compaction_spark.plans.packer import ffd_pack
 from iceberg_compaction_spark.plans.parallelism import calculate_parallelism
-from iceberg_compaction_spark.plans.selection import select_files
 from iceberg_compaction_spark.sources import manifest as mf
 from iceberg_compaction_spark.sources import scan as scan_mod
 from iceberg_compaction_spark.sources.table import Table
@@ -178,107 +178,60 @@ class CompactionRunner:
 
     # ------------------------------------------------------------------
     def plan(self, snapshot_id: int | None = None) -> list[BinPlan]:
-        """Planning as a DataFrame job over the manifest metadata table
-        (S1 + P2/P3 + C1 + C3). Collects only the *plan* (one row per
-        selected file), never data."""
+        """Select files (S1 + P2-P5/P7 + ``row_filter``) and FFD-pack
+        them per table partition (C1 + C3), on the driver over the
+        resolved manifest — the reference's ``FileSelector`` →
+        ``ListPacker`` order (file_selection.rs:22-54, packer.rs:36-76).
+        Runs no Spark job unless ``FILES_WITH_DELETES`` must count
+        position-delete references."""
         cfg = self.config
-        # round 9 (guide §5/§7.3): planning over a MODEST manifest is
-        # driver-side python — the manifest rows are already resolved
-        # on the driver, and a Spark job (shuffle + applyInPandas) for
-        # a few hundred rows costs seconds of pure overhead per
-        # compaction. The DataFrame path remains the production shape
-        # for manifests past the threshold (10^5+ files plan
-        # partition-parallel with no driver bottleneck). Both paths run
-        # the identical selection predicate and the same ffd_pack
-        # greedy with the same (size desc, path asc) order, so the bin
-        # schedule is byte-identical.
-        man_data = [
-            r
-            for r in self.table.manifest(snapshot_id)
-            if r["content"] == mf.CONTENT_DATA
-        ]
-        fast = (
-            not cfg.row_filter
-            and cfg.selection
-            in (SelectionStrategy.FULL, SelectionStrategy.SMALL_FILES)
-            and len(man_data) <= 65_536
-        )
-        if fast:
-            sel = man_data
-            if cfg.partition_filter:
-                allowed = set(cfg.partition_filter)
-                sel = [r for r in sel if r["partition"] in allowed]
-            if cfg.selection == SelectionStrategy.SMALL_FILES:
-                sel = [
-                    r
-                    for r in sel
-                    if r["size_bytes"] <= cfg.small_file_threshold_bytes
-                ]
-            rows = []
-            if cfg.grouping == GroupingStrategy.SINGLE:
-                for r in sel:
-                    rows.append(
-                        {
-                            "path": r["path"],
-                            "partition": r["partition"],
-                            "size_bytes": r["size_bytes"],
-                            "record_count": r["record_count"],
-                            "bin": f"{r['partition']}#0",
-                        }
-                    )
-            else:
-                from iceberg_compaction_spark.plans.packer import ffd_pack
+        man = self.table.manifest(snapshot_id)
+        data = [r for r in man if r["content"] == mf.CONTENT_DATA]
+        pos_all = [r for r in man if r["content"] == mf.CONTENT_POS_DEL]
+        eq_all = [r for r in man if r["content"] == mf.CONTENT_EQ_DEL]
 
-                by_part: dict[str, list[dict]] = {}
-                for r in sel:
-                    by_part.setdefault(r["partition"], []).append(r)
-                for part, members in by_part.items():
-                    members.sort(key=lambda r: (-r["size_bytes"], r["path"]))
-                    packed = ffd_pack(
-                        [r["size_bytes"] for r in members],
-                        cfg.group_target_size_bytes,
-                    )
-                    for k, idxs in enumerate(packed):
-                        for i in idxs:
-                            r = members[i]
-                            rows.append(
-                                {
-                                    "path": r["path"],
-                                    "partition": part,
-                                    "size_bytes": r["size_bytes"],
-                                    "record_count": r["record_count"],
-                                    "bin": f"{part}#{k}",
-                                }
-                            )
-        else:
-            files_df = self.table.files_df(self.spark, snapshot_id)
-            selected = select_files(
-                self.spark,
-                files_df,
-                cfg,
-                col_types=self.table.column_type_categories() if cfg.row_filter else None,
+        sel = data
+        if cfg.partition_filter:
+            allowed = set(cfg.partition_filter)
+            sel = [r for r in sel if r["partition"] in allowed]
+        if cfg.row_filter:
+            # Iceberg rewrite_data_files(filter=...): the scan pruner's
+            # conservative evaluator — an unprunable predicate keeps all
+            sel, _ = pruning.prune_files(
+                sel, cfg.row_filter, col_types=self.table.column_type_categories()
             )
-            if cfg.grouping == GroupingStrategy.SINGLE:
-                assigned = selected.select(
-                    "path",
-                    "partition",
-                    "size_bytes",
-                    "record_count",
-                    "sequence_number",
-                    F.concat(F.col("partition"), F.lit("#0")).alias("bin"),
-                    F.lit(0).alias("bin_index"),
-                )
-            else:
-                assigned = plan_bins_df(selected, cfg.group_target_size_bytes)
-            rows = assigned.collect()
+        if cfg.selection == SelectionStrategy.SMALL_FILES:
+            sel = [r for r in sel if r["size_bytes"] <= cfg.small_file_threshold_bytes]
+        elif cfg.selection == SelectionStrategy.FILES_WITH_DELETES:
+            counts = self._delete_counts(sel, pos_all, eq_all)
+            sel = [r for r in sel if counts.get(r["path"], 0) >= cfg.min_delete_count]
+        elif cfg.selection != SelectionStrategy.FULL:
+            raise ValueError(f"unknown strategy {cfg.selection}")
+
         bins: dict[str, BinPlan] = {}
-        for r in rows:
+
+        def add(bin_id: str, r: dict) -> None:
             b = bins.setdefault(
-                r["bin"], BinPlan(bin=r["bin"], partition=r["partition"], paths=[], total_bytes=0, record_count=0)
+                bin_id,
+                BinPlan(bin=bin_id, partition=r["partition"], paths=[], total_bytes=0, record_count=0),
             )
             b.paths.append(r["path"])
             b.total_bytes += r["size_bytes"]
             b.record_count += r["record_count"]
+
+        if cfg.grouping == GroupingStrategy.SINGLE:
+            for r in sel:
+                add(f"{r['partition']}#0", r)
+        else:
+            by_part: dict[str, list[dict]] = {}
+            for r in sel:
+                by_part.setdefault(r["partition"], []).append(r)
+            for part, members in by_part.items():
+                members.sort(key=lambda r: (-r["size_bytes"], r["path"]))
+                packed = ffd_pack([r["size_bytes"] for r in members], cfg.group_target_size_bytes)
+                for k, idxs in enumerate(packed):
+                    for i in idxs:
+                        add(f"{part}#{k}", members[i])
         for b in bins.values():
             b.paths.sort()
             b.executor_parallelism, b.output_parallelism = calculate_parallelism(
@@ -290,26 +243,43 @@ class CompactionRunner:
         # is judged PER BIN via delete scoping — a one-partition MERGE
         # no longer drags every other partition's single-file bins into
         # the rewrite.
-        from iceberg_compaction_spark.plans import delete_scope
-
-        man = self.table.manifest(snapshot_id)
-        pos_all = [r for r in man if r["content"] == mf.CONTENT_POS_DEL]
-        eq_all = [r for r in man if r["content"] == mf.CONTENT_EQ_DEL]
-        by_path = {r["path"]: r for r in man if r["content"] == mf.CONTENT_DATA}
+        by_path = {r["path"]: r for r in data}
 
         def bin_has_deletes(b: BinPlan) -> bool:
             if not (pos_all or eq_all):
                 return False
-            data = [by_path[p] for p in b.paths if p in by_path]
-            pos, eq = delete_scope.scope_deletes(data, pos_all, eq_all)
+            pos, eq = delete_scope.scope_deletes(
+                [by_path[p] for p in b.paths], pos_all, eq_all
+            )
             return bool(pos or eq)
 
-        out = [
+        return [
             b
             for b in sorted(bins.values(), key=lambda x: x.bin)
             if len(b.paths) > 1 or bin_has_deletes(b)
         ]
-        return out
+
+    def _delete_counts(self, data_rows: list[dict], pos_rows: list[dict], eq_rows: list[dict]) -> dict:
+        """{data path: delete files applicable to it} for P3
+        (FilesWithDeletes, file_selection.rs:103-114). Position deletes
+        count exactly: the delete files that name the path, from one
+        aggregate scan (one row per referenced data file). Equality
+        deletes count by the rule scans and bins attach them with
+        (``delete_scope.eq_delete_counts``: sequence and key bounds)."""
+        counts = delete_scope.eq_delete_counts(data_rows, eq_rows)
+        if pos_rows:
+            refs = (
+                scan_mod.read_position_deletes(self.spark, [r["path"] for r in pos_rows])
+                .select(
+                    FILE_COL,
+                    scan_mod.norm_file_path(F.input_file_name()).alias("_del_file"),
+                )
+                .groupBy(FILE_COL)
+                .agg(F.countDistinct("_del_file").alias("n"))
+            )
+            for r in refs.collect():
+                counts[r[FILE_COL]] = counts.get(r[FILE_COL], 0) + r["n"]
+        return counts
 
     # ------------------------------------------------------------------
     # checkpoints
@@ -348,8 +318,6 @@ class CompactionRunner:
         seq with key bounds overlapping the bin's — so a one-partition
         MERGE's delete set is read by that partition's bins only, not
         by every bin of the table."""
-        from iceberg_compaction_spark.plans import delete_scope
-
         man = self.table.manifest(snapshot_id)
         bin_set = set(bin_paths)
         data_rows = [

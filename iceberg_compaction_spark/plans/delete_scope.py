@@ -35,15 +35,9 @@ an IO/shuffle reduction, never a correctness dependency.
 from __future__ import annotations
 
 import bisect
-import json
 from typing import Sequence
 
-
-def _stats_of(row: dict) -> dict:
-    try:
-        return json.loads(row.get("stats_json") or "{}")
-    except ValueError:
-        return {}
+from iceberg_compaction_spark.plans.pruning import stats_of
 
 
 def _safe_le(a, b) -> bool | None:
@@ -68,7 +62,7 @@ def union_key_bounds(data_rows: Sequence[dict], keys: Sequence[str]) -> dict:
     for r in data_rows:
         if len(unknown) == len(want):
             break  # every key already unknown: no more decode can help
-        st = _stats_of(r)
+        st = stats_of(r)
         for k in want:
             if k in unknown:
                 continue
@@ -92,13 +86,15 @@ def union_key_bounds(data_rows: Sequence[dict], keys: Sequence[str]) -> dict:
 
 
 def eq_delete_applicable(
-    del_row: dict, bounds: dict, min_data_seq: int | None
+    del_row: dict, bounds: dict, min_data_seq: int | None, del_stats: dict | None = None
 ) -> bool:
     """Can this equality-delete file kill any row of the scoped data
-    files? False only on PROOF of disjointness (seq or key bounds)."""
+    files? False only on PROOF of disjointness (seq or key bounds).
+    ``del_stats``: the delete file's decoded stats, for callers that
+    test one delete file against many scopes."""
     if min_data_seq is not None and del_row["sequence_number"] <= min_data_seq:
         return False  # kills only seq < S; every scoped file is >= S
-    st = _stats_of(del_row)
+    st = stats_of(del_row) if del_stats is None else del_stats
     for k in del_row.get("equality_ids") or []:
         if k not in bounds:
             continue  # union bounds unknown for this key: assume overlap
@@ -113,11 +109,28 @@ def eq_delete_applicable(
     return True
 
 
+def eq_delete_counts(data_rows: Sequence[dict], eq_rows: Sequence[dict]) -> dict:
+    """{data path: equality-delete files applicable to that file alone}
+    — ``eq_delete_applicable`` with each file as its own scope. Each
+    file's stats are decoded once."""
+    if not eq_rows:
+        return {}
+    keys = sorted({k for r in eq_rows for k in (r.get("equality_ids") or [])})
+    dels = [(d, stats_of(d)) for d in eq_rows]
+    out = {}
+    for r in data_rows:
+        fb = union_key_bounds([r], keys)
+        out[r["path"]] = sum(
+            eq_delete_applicable(d, fb, r["sequence_number"], st) for d, st in dels
+        )
+    return out
+
+
 def pos_delete_applicable(del_row: dict, sorted_data_paths: list[str]) -> bool:
     """Can this position-delete file reference any scoped data path?
     Its ``_file`` column bounds [min, max] bracket the referenced
     paths; if no scoped path falls inside, nothing can join."""
-    st = _stats_of(del_row).get("_file")
+    st = stats_of(del_row).get("_file")
     if not st or st.get("min") is None or st.get("max") is None:
         return True  # unknown bounds: attach
     mn, mx = st["min"], st["max"]

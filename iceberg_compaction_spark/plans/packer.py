@@ -7,24 +7,14 @@ each into the first of the last ``lookback`` open bins it fits under
 ``target_weight``, else open a new bin; oversized items always get a
 solo bin.
 
-Two realizations:
-  * ``ffd_pack`` — exact greedy, plain Python, for unit parity and
-    driver-side planning of modest manifests;
-  * ``plan_bins_df`` — the production path: a **DataFrame job** that
-    runs the same greedy per table-partition inside ``applyInPandas``
-    (planning parallelizes across partitions — file-size histograms
-    from the manifest metadata table in, bin schedule out). A table
-    with 10^5 partitions plans 10^5-way parallel; no driver bottleneck.
+``CompactionRunner.plan`` runs it once per table partition over the
+resolved manifest rows, on the driver (bins never span partitions);
+partition-spec migration packs its files with it too.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def ffd_pack(
@@ -58,69 +48,3 @@ def ffd_pack(
             bins.append([i])
             bin_weights.append(w)
     return bins
-
-
-_PLAN_DDL = (
-    "path string, partition string, size_bytes bigint, record_count bigint,"
-    " sequence_number bigint, bin string, bin_index int"
-)
-
-
-def plan_bins_df(files_df: DataFrame, target_bytes: int, lookback: int = 1) -> DataFrame:
-    """Assign every selected file to a bin, grouped by table partition
-    (bins never span partitions — rewrites stay partition-local, so
-    lineage and resume are per-partition as the north rule requires).
-
-    Input: manifest rows (needs path/partition/size_bytes/record_count/
-    sequence_number). Output adds ``bin`` (= ``<partition>#<k>``) and
-    ``bin_index``.
-    """
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = pdf["partition"].iloc[0] if len(pdf) else ""
-        pdf = pdf.sort_values(["size_bytes", "path"], ascending=[False, True]).reset_index(
-            drop=True
-        )
-        bins = ffd_pack(pdf["size_bytes"].tolist(), target_bytes, lookback)
-        bin_of = {}
-        for k, members in enumerate(bins):
-            for i in members:
-                bin_of[i] = k
-        pdf["bin_index"] = [bin_of[i] for i in range(len(pdf))]
-        pdf["bin"] = [f"{part}#{k}" for k in pdf["bin_index"]]
-        return pdf[
-            [
-                "path",
-                "partition",
-                "size_bytes",
-                "record_count",
-                "sequence_number",
-                "bin",
-                "bin_index",
-            ]
-        ]
-
-    cols = files_df.select(
-        "path", "partition", "size_bytes", "record_count", "sequence_number"
-    )
-    return cols.groupBy("partition").applyInPandas(pack, schema=_PLAN_DDL)
-
-
-def size_histogram(files_df: DataFrame, bucket_bytes: int = 8 << 20) -> DataFrame:
-    """A6: the file-size histogram planners score partitions with
-    (fragment-ratio scoring spec'd at
-    ``TECHNICAL_DEEP_DIVE.md:90-125``)."""
-    return (
-        files_df.groupBy(
-            "partition",
-            (F.floor(F.col("size_bytes") / F.lit(bucket_bytes)) * F.lit(bucket_bytes)).alias(
-                "size_bucket"
-            ),
-        )
-        .agg(
-            F.count("*").alias("file_count"),
-            F.sum("size_bytes").alias("total_bytes"),
-            F.avg("size_bytes").alias("avg_bytes"),
-        )
-        .orderBy("partition", "size_bucket")
-    )

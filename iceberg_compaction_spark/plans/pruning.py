@@ -48,6 +48,7 @@ Two evaluators with opposite defaults:
 
 from __future__ import annotations
 
+import json
 import re
 
 _LIT = r"(?:TIMESTAMP\s+'[^']*'|DATE\s+'[^']*'|'[^']*'|\"[^\"]*\"|[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?)"
@@ -453,6 +454,15 @@ def file_all_match(
     return False
 
 
+def stats_of(row: dict) -> dict:
+    """A manifest row's decoded ``stats_json`` ({} when absent or
+    malformed: no bounds, so nothing is excluded)."""
+    try:
+        return json.loads(row.get("stats_json") or "{}")
+    except ValueError:
+        return {}
+
+
 def prune_files(
     rows: list[dict], filter_expr: str, col_types: dict | None = None
 ) -> tuple[list[dict], int]:
@@ -461,20 +471,30 @@ def prune_files(
     ``col_types`` (from ``col_type_categories``) lets ts-shaped bare
     string literals prune on timestamp columns while comparing raw on
     string columns; omitted ⇒ such literals prune nothing."""
-    import json
-
     disjuncts = parse_predicate(filter_expr)
     if disjuncts is None:
         return rows, 0
     # a disjunct of only-UNPARSED conjuncts may match anything: no pruning
     if any(all(c is UNPARSED for c in d) for d in disjuncts):
         return rows, 0
-    kept = []
-    for r in rows:
-        try:
-            stats = json.loads(r.get("stats_json") or "{}")
-        except ValueError:
-            stats = {}
-        if file_may_match_any(stats, disjuncts, col_types):
-            kept.append(r)
+    kept = [r for r in rows if file_may_match_any(stats_of(r), disjuncts, col_types)]
     return kept, len(rows) - len(kept)
+
+
+def classify_data_rows(
+    data_rows: list[dict], predicate: str, col_types: dict | None = None
+) -> dict:
+    """{path: 'pruned' | 'all' | 'straddle'} — the three-way split the
+    metadata operators (fast_count, DELETE/UPDATE WHERE) share: no row
+    can match, every row matches, or the rows must be scanned."""
+    disjuncts = parse_predicate(predicate)
+    out = {}
+    for r in data_rows:
+        stats = stats_of(r)
+        if not file_may_match_any(stats, disjuncts, col_types):
+            out[r["path"]] = "pruned"
+        elif file_all_match(stats, disjuncts, col_types):
+            out[r["path"]] = "all"
+        else:
+            out[r["path"]] = "straddle"
+    return out

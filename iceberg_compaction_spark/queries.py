@@ -163,7 +163,7 @@ SELECT * FROM manifest WHERE size_bytes <= 100000
 """
 
 
-def q_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_size_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: file-size histogram per partition, the planner's scoring
     input (TECHNICAL_DEEP_DIVE.md:90-125)."""
     _utc(spark)

@@ -7,14 +7,15 @@ models this as ``FileMetadata`` structs
 from ``FileScanTask``s and converts written output back to DataFile
 entries with per-column bounds
 (``crates/worker/src/datafusion/mod.rs:266-375``). Here the manifest is
-a small Parquet table written driver-side with pyarrow; planning reads
-it either as pandas (driver planning, ≤10^6 rows) or as a Spark
-DataFrame (scale path).
+a small Parquet table written driver-side with pyarrow. Scan pruning
+and compaction planning read it as resolved Python rows on the driver
+(``Table.manifest``); ``Table.files_df`` reads the same files as a
+Spark DataFrame for metadata tables and delete sweeps.
 
 Stats collection reads Parquet *footers only* (never the data): a
-driver-side thread pool for small file counts, a distributed
-``mapPartitions`` job above a threshold — at 100 TB / 10^5+ files the
-driver must not serially open every footer.
+driver thread pool, or a ``mapPartitions`` job once a batch holds more
+than ``_DISTRIBUTED_THRESHOLD`` files — the size above which the job
+measured faster than the pool.
 """
 
 from __future__ import annotations
@@ -271,7 +272,11 @@ def _footer_stats(path: str) -> tuple[int, int, str]:
     return md.num_rows, os.path.getsize(path), json.dumps(stats, sort_keys=True, default=str)
 
 
-_DISTRIBUTED_THRESHOLD = 256
+# Footer reads go to a Spark job above this many files. Measured on a
+# 4-core host, local[2], 6-column files: the thread pool wins up to
+# ~2,500 files (2,000: 0.9 s vs 1.3 s), the two tie near 3,000, and the
+# job wins from 3,500 on (10,000: 2.3 s vs 4.6 s).
+_DISTRIBUTED_THRESHOLD = 3000
 
 
 def collect_file_infos(
@@ -285,8 +290,9 @@ def collect_file_infos(
     """Footer-only stats for freshly written files → manifest rows.
 
     ``partition_of(path) -> str`` derives the partition value. With a
-    SparkSession and many files the footer reads are distributed
-    (per-partition imperative work — the one legitimate RDD use)."""
+    SparkSession and more than ``_DISTRIBUTED_THRESHOLD`` files the
+    footer reads run as a Spark job (per-partition imperative work —
+    the one legitimate RDD use); otherwise on a driver thread pool."""
     paths = sorted(paths)
     if spark is not None and len(paths) > _DISTRIBUTED_THRESHOLD:
         sc = spark.sparkContext

@@ -43,8 +43,9 @@ manifests (O(changed files)); every ``DELTA_CHAIN_MAX`` commits the
 chain collapses into a base manifest SHARDED BY PARTITION, where
 untouched partitions hard-link the previous base's shards — so even
 the periodic collapse under the commit lock is O(changed partitions),
-not O(table files). Planning reads manifests as Spark DataFrames
-(``files_df``), so no driver bottleneck in the plan itself.
+not O(table files). Scan pruning and compaction planning run on the
+driver over the resolved manifest rows; ``files_df`` exposes the same
+rows as a Spark DataFrame for metadata tables and delete sweeps.
 """
 
 from __future__ import annotations
@@ -697,10 +698,6 @@ class Table:
     # Delta chains are collapsed into a fresh base every N commits so
     # resolution work and expiry materialization stay bounded.
     DELTA_CHAIN_MAX = 32
-    # Above this many live data files, scan-filter pruning runs
-    # executor-side over files_df (plans/pruning_df) instead of the
-    # driver Python loop — same evaluator, distributed decode.
-    PRUNE_DF_THRESHOLD = 4096
 
     @staticmethod
     def _cache_put(key: str, rows: list[dict]) -> None:
@@ -854,7 +851,8 @@ class Table:
 
     def files_df(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """The manifest as a Spark DataFrame — the ``.files`` metadata
-        table (S1); planning jobs stay DataFrame-native at scale.
+        table (S1), read by the metadata-table views and the
+        dangling-delete sweeps.
 
         Delta chains resolve executor-side: base + delta parquets union
         with a chain ordinal; per path the newest op wins (an add and a
@@ -1463,26 +1461,9 @@ class Table:
         if filter and data_rows:
             from iceberg_compaction_spark.plans import pruning
 
-            if len(data_rows) > Table.PRUNE_DF_THRESHOLD and paths is None:
-                # large manifest: evaluate the same pruner executor-side
-                # over files_df and pull back surviving paths only — the
-                # driver never JSON-decodes per-file stats
-                from iceberg_compaction_spark.plans.pruning_df import prune_files_df
-
-                fdf = self.files_df(spark, snapshot_id).filter(
-                    F.col("content") == mf.CONTENT_DATA
-                )
-                survivors = prune_files_df(
-                    fdf, filter, col_types=self.column_type_categories()
-                )
-                keep = {r["path"] for r in survivors.select("path").collect()}
-                pruned = len(data_rows) - len(keep)
-                data_rows = [r for r in data_rows if r["path"] in keep]
-                METRICS.inc("scan.prune_df_path")
-            else:
-                data_rows, pruned = pruning.prune_files(
-                    data_rows, filter, col_types=self.column_type_categories()
-                )
+            data_rows, pruned = pruning.prune_files(
+                data_rows, filter, col_types=self.column_type_categories()
+            )
             # accumulate, don't assign: a scan combining partition_values
             # with a filter (e.g. a filtered index probe) counted its
             # partition-skipped files just above

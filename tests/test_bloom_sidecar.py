@@ -138,13 +138,11 @@ def test_orphan_cleanup_sweeps_unreferenced_sidecars(spark, tmp_warehouse):
     assert t.scan(spark).count() == 1000
 
 
-def test_df_prune_path_probes_sidecars(spark, tmp_warehouse, monkeypatch):
-    """Above PRUNE_DF_THRESHOLD the pruning twin runs executor-side —
-    bloom sidecars must still probe (read inside the Arrow UDF) and
+def test_df_prune_path_probes_sidecars(spark, tmp_warehouse):
+    """Scan pruning probes bloom sidecars from a cold sidecar cache, and
     the point lookup stays exact."""
     t = _mk(spark, os.path.join(tmp_warehouse, "dfbloom"))
     n_files = len(t.files(content=mf.CONTENT_DATA))
-    monkeypatch.setattr(Table, "PRUNE_DF_THRESHOLD", 0)
     bloom._SIDECAR_CACHE.clear()
     assert t.scan(spark, filter="conv_id = 'conv_000123'").count() == 100
     assert t.last_scan_pruned_files > 0

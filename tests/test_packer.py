@@ -4,12 +4,21 @@
 
 from __future__ import annotations
 
+import os
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from iceberg_compaction_spark.config import CompactionConfig
-from iceberg_compaction_spark.plans.packer import ffd_pack, plan_bins_df
+from iceberg_compaction_spark.config import (
+    CompactionConfig,
+    GroupingStrategy,
+    SelectionStrategy,
+)
+from iceberg_compaction_spark.plans.compaction import CompactionRunner
+from iceberg_compaction_spark.plans.packer import ffd_pack
 from iceberg_compaction_spark.plans.parallelism import calculate_parallelism
+from iceberg_compaction_spark.sources import manifest as mf
+from iceberg_compaction_spark.sources.table import Table
 
 
 def bin_weights(weights, bins):
@@ -55,22 +64,37 @@ def test_parallelism_formula():
     assert calculate_parallelism(100 << 30, 10_000, cfg) == (16, 16)
 
 
-def test_plan_bins_df_groups_within_partition(spark):
-    rows = [
-        (f"/f{i}", "2023-11-14" if i % 2 == 0 else "2023-11-15", 30 << 20, 100, 1)
-        for i in range(10)
-    ]
-    df = spark.createDataFrame(
-        rows, "path string, partition string, size_bytes bigint, record_count bigint, sequence_number bigint"
+def test_plan_bins_stay_within_partition(spark, tmp_warehouse):
+    """CompactionRunner.plan packs per table partition: no bin spans
+    partitions or exceeds the group target (manifest rows only — plan
+    opens no data file)."""
+    loc = os.path.join(tmp_warehouse, "packed")
+    t = Table.create(loc, "id bigint")
+    t.commit(
+        "append",
+        added=[
+            mf.FileInfo(
+                path=os.path.join(loc, "data", f"f{i}.parquet"),
+                content=mf.CONTENT_DATA,
+                size_bytes=30 << 20,
+                record_count=100,
+                partition="2023-11-14" if i % 2 == 0 else "2023-11-15",
+            )
+            for i in range(10)
+        ],
     )
-    out = plan_bins_df(df, target_bytes=70 << 20).collect()
-    assert len(out) == 10
-    by_bin = {}
-    for r in out:
-        by_bin.setdefault(r["bin"], []).append(r)
-        assert r["bin"].startswith(r["partition"] + "#")
-    for rows_ in by_bin.values():
-        assert sum(r["size_bytes"] for r in rows_) <= 70 << 20
-        assert len({r["partition"] for r in rows_}) == 1  # bins never span partitions
-    # 5 files/partition @30MB, target 70MB ⇒ 2+2+1 per partition = 3 bins each
-    assert len(by_bin) == 6
+    cfg = CompactionConfig(
+        selection=SelectionStrategy.FULL,
+        grouping=GroupingStrategy.BIN_PACK,
+        group_target_size_bytes=70 << 20,
+    )
+    bins = CompactionRunner(spark, t, cfg).plan()
+    by_path = {r["path"]: r for r in t.files(content=mf.CONTENT_DATA)}
+    for b in bins:
+        assert b.bin.startswith(b.partition + "#")
+        assert b.total_bytes <= 70 << 20
+        # bins never span partitions
+        assert {by_path[p]["partition"] for p in b.paths} == {b.partition}
+    # 5 files/partition @30MB, target 70MB ⇒ 2+2+1 per partition; the
+    # single-file bins (nothing to merge, no deletes) are not planned
+    assert sorted(len(b.paths) for b in bins) == [2, 2, 2, 2]

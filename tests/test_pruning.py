@@ -9,6 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from iceberg_compaction_spark.plans.pruning import (
+    classify_data_rows,
     file_may_match,
     parse_conjuncts,
     prune_files,
@@ -221,3 +222,41 @@ def test_partition_column_filter_and_empty_prune(spark, tmp_warehouse):
     none = t.scan(spark, filter="_part = '1999-01-01'")
     assert none.count() == 0
     assert t.last_scan_pruned_files == n_files
+
+
+def _data_row(path, stats):
+    return {"path": path, "content": "data", "stats_json": json.dumps(stats)}
+
+
+def test_ts_and_string_literal_resolution():
+    """A ts-shaped bare string literal compares as a timestamp on a
+    timestamp column and raw on a string column."""
+    rows = [
+        _data_row(
+            "tsfile",
+            {"ts": {"min": "2024-06-02T01:00:00", "max": "2024-06-02T12:00:00", "nulls": 0},
+             "c": {"min": "2024-06-01 05:00:00", "max": "2024-06-01 05:00:00", "nulls": 0}},
+        )
+    ]
+    ct = {"ts": "ts", "c": "str"}
+    for expr, survives in [
+        ("ts <= '2024-06-02 23:59:59'", True),
+        ("ts > '2024-06-02 23:59:59'", False),
+        ("c < '2024-06-01T00:00:00'", True),   # raw string: ' ' < 'T'
+        ("c >= '2024-06-01T00:00:00'", False),
+    ]:
+        kept, pruned = prune_files(rows, expr, col_types=ct)
+        assert (len(kept) == 1) is survives, expr
+        assert pruned == 1 - len(kept), expr
+
+
+def test_classify_data_rows_verdicts():
+    rows = [
+        _data_row(f"f{i}", {"a": {"min": mn, "max": mx, "nulls": nulls}})
+        for i, (mn, mx, nulls) in enumerate(
+            [(0, 10, 0), (5, 50, 0), (60, 90, 0), (None, None, None), (20, 20, 0)]
+        )
+    ]
+    assert classify_data_rows(rows, "a >= 0 AND a < 40", {"a": "num"}) == {
+        "f0": "all", "f1": "straddle", "f2": "pruned", "f3": "straddle", "f4": "all",
+    }

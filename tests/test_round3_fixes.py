@@ -539,32 +539,6 @@ def test_stream_sessionize_across_arrow_chunks(spark, tmp_warehouse):
 
 
 # ---------------------------------------------------------------------------
-# S5 contract: object-store registration sets exactly the fs.s3a.* keys
-# the reference's storage config implies (crates/common/src/storage.rs:
-# 254-285: endpoint, region, credentials, path-style, multipart floor)
-def test_configure_s3a_contract(spark):
-    from iceberg_compaction_spark.sources.objectstore import configure_s3a
-
-    configure_s3a(
-        spark, access_key="AK", secret_key="SK",
-        endpoint="http://localhost:9000", region="us-east-1",
-        path_style_access=True,
-    )
-    hc = spark.sparkContext._jsc.hadoopConfiguration()
-    assert hc.get("fs.s3a.access.key") == "AK"
-    assert hc.get("fs.s3a.secret.key") == "SK"
-    assert hc.get("fs.s3a.endpoint") == "http://localhost:9000"
-    assert hc.get("fs.s3a.endpoint.region") == "us-east-1"
-    assert hc.get("fs.s3a.path.style.access") == "true"
-    # the reference's 8 MB multipart chunks respect S3's 5 MB floor
-    assert int(hc.get("fs.s3a.multipart.size")) == 8 << 20 >= 5 << 20
-    assert hc.get("fs.s3a.fast.upload") == "true"
-    configure_s3a(spark, path_style_access=False)
-    assert hc.get("fs.s3a.path.style.access") == "false"
-    assert hc.get("fs.s3a.access.key") == "AK"  # unset args leave keys alone
-
-
-# ---------------------------------------------------------------------------
 # footer stats: all-null row-group chunks don't poison bounds; files
 # without statistics yield no bounds at all (conservative)
 def test_footer_stats_unknown_propagation(tmp_warehouse):

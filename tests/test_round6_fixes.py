@@ -191,17 +191,12 @@ def test_redact_pii_rules(spark):
 
 
 def test_distributed_orphan_scan_matches_driver_variant(spark, tmp_warehouse):
-    """The Spark-plan orphan scan (mapInPandas listing anti-joined
-    against the union of retained files_df) must agree with the
-    driver-side clean_orphan_files for the parquet population, and
-    removal must leave live data intact."""
+    """The orphan sweep finds a crashed run's directory under data/ and
+    a stray parquet directly under deletes/ (depth 0), removes exactly
+    those, leaves live data intact, and is idempotent."""
     import os
 
-    from iceberg_compaction_spark.operators.maintenance import (
-        clean_orphan_files,
-        clean_orphan_files_distributed,
-        orphan_files_df,
-    )
+    from iceberg_compaction_spark.operators.maintenance import clean_orphan_files
     from iceberg_compaction_spark.sources.generator import (
         create_transcripts_table,
         transcripts_df,
@@ -211,31 +206,27 @@ def test_distributed_orphan_scan_matches_driver_variant(spark, tmp_warehouse):
         spark, os.path.join(tmp_warehouse, "dorph"), n_turns=1500, n_convs=10, n_files=4
     )
     # orphan 1: a crashed-run directory under data/
-    transcripts_df(spark, 80, 4).coalesce(1).write.parquet(
-        os.path.join(t.data_dir, "crashed-run")
-    )
+    crashed = os.path.join(t.data_dir, "crashed-run")
+    transcripts_df(spark, 80, 4).coalesce(1).write.parquet(crashed)
     # orphan 2: a stray parquet directly under deletes/ (depth-0 listing path)
-    transcripts_df(spark, 10, 2).toPandas().to_parquet(
-        os.path.join(t.deletes_dir, "stray.parquet")
+    stray = os.path.join(t.deletes_dir, "stray.parquet")
+    transcripts_df(spark, 10, 2).toPandas().to_parquet(stray)
+
+    found = clean_orphan_files(t, dry_run=True)
+    assert stray in found
+    assert [p for p in found if p != stray] and all(
+        p.startswith(crashed + os.sep) for p in found if p != stray
     )
+    assert all(os.path.exists(p) for p in found)  # dry run removes nothing
 
-    driver_side = [
-        p for p in clean_orphan_files(t, dry_run=True) if p.endswith(".parquet")
-    ]
-    dist_df = orphan_files_df(spark, t)
-    assert dist_df.schema["path"].dataType.typeName() == "string"
-    dist = sorted(r["path"] for r in dist_df.collect())
-    assert dist == sorted(driver_side)
-    assert any("crashed-run" in p for p in dist)
-    assert any(p.endswith("stray.parquet") for p in dist)
-
-    removed = clean_orphan_files_distributed(spark, t)
-    assert removed == dist
+    removed = clean_orphan_files(t)
+    assert removed == found
     assert all(not os.path.exists(p) for p in removed)
+    assert not os.path.exists(crashed)  # committer artifacts and dir swept too
     assert t.scan(spark).count() == 1500  # live data untouched
 
     # idempotent: second pass finds nothing
-    assert clean_orphan_files_distributed(spark, t) == []
+    assert clean_orphan_files(t) == []
 
 
 def test_distributed_orphan_scan_respects_cutoff(spark, tmp_warehouse):
@@ -244,9 +235,7 @@ def test_distributed_orphan_scan_respects_cutoff(spark, tmp_warehouse):
     import os
     import time
 
-    from iceberg_compaction_spark.operators.maintenance import (
-        clean_orphan_files_distributed,
-    )
+    from iceberg_compaction_spark.operators.maintenance import clean_orphan_files
     from iceberg_compaction_spark.sources.generator import (
         create_transcripts_table,
         transcripts_df,
@@ -259,5 +248,5 @@ def test_distributed_orphan_scan_respects_cutoff(spark, tmp_warehouse):
         os.path.join(t.data_dir, "inflight")
     )
     cutoff = int(time.time() * 1000) - 60_000  # everything is newer
-    assert clean_orphan_files_distributed(spark, t, older_than_ms=cutoff) == []
-    assert clean_orphan_files_distributed(spark, t) != []  # default cutoff sweeps it
+    assert clean_orphan_files(t, older_than_ms=cutoff) == []
+    assert clean_orphan_files(t) != []  # default cutoff sweeps it

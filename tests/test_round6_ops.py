@@ -447,6 +447,58 @@ def test_row_filter_unparseable_selects_everything(spark, tmp_warehouse):
     assert res.input_files == n_files
 
 
+def test_row_filter_plan_runs_no_spark_job(spark, tmp_warehouse):
+    """Planning a filtered rewrite is metadata work on the driver: the
+    call starts no Spark job (checked through a job group, with a
+    control job proving the group records jobs)."""
+    import uuid
+
+    from iceberg_compaction_spark.config import (
+        CompactionConfig,
+        GroupingStrategy,
+        SelectionStrategy,
+    )
+    from iceberg_compaction_spark.plans.compaction import CompactionRunner
+    from iceberg_compaction_spark.sources.generator import create_transcripts_table
+
+    t = create_transcripts_table(
+        spark,
+        os.path.join(tmp_warehouse, "rowf3"),
+        n_turns=2000,
+        n_convs=10,
+        n_files=6,
+        partitioned=True,
+        ts_step_s=60,
+    )
+    cut = max(f["partition"] for f in t.files(content="data"))
+    runner = CompactionRunner(
+        spark,
+        t,
+        CompactionConfig(
+            selection=SelectionStrategy.FULL,
+            grouping=GroupingStrategy.BIN_PACK,
+            row_filter=f"ts >= TIMESTAMP '{cut} 00:00:00'",
+        ),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "row_filter plan")
+    try:
+        spark.range(1).count()
+        before = set(tracker.getJobIdsForGroup(group))
+        assert before  # the group records this thread's jobs
+        bins = runner.plan()
+        after = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after == before
+    planned = {p for b in bins for p in b.paths}
+    assert planned and all(
+        f["partition"] == cut for f in t.files(content="data") if f["path"] in planned
+    )
+
+
 # ----------------------------------------------------------------------
 # incremental dedup against a persisted LSH index
 def test_incremental_dedup_matches_batch(spark):

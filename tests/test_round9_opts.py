@@ -8,8 +8,6 @@ pinning the new path to the old semantics:
   * vectorized IVF probe == distributed-join IVF probe;
   * duplicate_spans' min(id)!=max(id) window == the count-distinct
     aggregation + join-back plan;
-  * CompactionRunner.plan's driver-side fast path == the DataFrame
-    (select_files + plan_bins_df) plan, bin for bin;
   * write_data_files(distribute=True) collapses a many-partition
     input to ~one file per table partition without changing rows.
 """
@@ -140,50 +138,6 @@ def test_duplicate_spans_window_matches_countdistinct_plan(spark):
         )
     )
     assert out == ref and len(out) > 0
-
-
-def test_plan_fast_path_matches_dataframe_plan(spark, tmp_warehouse):
-    from iceberg_compaction_spark.config import (
-        CompactionConfig,
-        GroupingStrategy,
-        SelectionStrategy,
-    )
-    from iceberg_compaction_spark.plans.compaction import CompactionRunner
-    from iceberg_compaction_spark.plans.packer import plan_bins_df
-    from iceberg_compaction_spark.plans.selection import select_files
-    from iceberg_compaction_spark.sources.generator import create_transcripts_table
-
-    table = create_transcripts_table(
-        spark, os.path.join(tmp_warehouse, "t"), n_turns=4000, n_convs=40,
-        n_files=24, partitioned=True,
-    )
-    cfg = CompactionConfig(
-        selection=SelectionStrategy.SMALL_FILES,
-        grouping=GroupingStrategy.BIN_PACK,
-        small_file_threshold_bytes=1 << 30,
-        group_target_size_bytes=64 << 10,
-    )
-    runner = CompactionRunner(spark, table, cfg)
-    fast = {
-        b.bin: (tuple(b.paths), b.total_bytes, b.record_count)
-        for b in runner.plan()
-    }
-    assigned = plan_bins_df(
-        select_files(spark, table.files_df(spark), cfg), cfg.group_target_size_bytes
-    )
-    ref: dict = {}
-    for r in assigned.collect():
-        paths, tb, rc = ref.setdefault(r["bin"], ([], 0, 0))
-        paths.append(r["path"])
-        ref[r["bin"]] = (paths, tb + r["size_bytes"], rc + r["record_count"])
-    ref = {
-        b: (tuple(sorted(paths)), tb, rc) for b, (paths, tb, rc) in ref.items()
-    }
-    # plan() drops single-file bins with no deletes; apply the same
-    # rule to the reference before comparing
-    ref = {b: v for b, v in ref.items() if len(v[0]) > 1}
-    fast = {b: v for b, v in fast.items() if len(v[0]) > 1}
-    assert fast == ref and len(fast) > 0
 
 
 def test_write_data_files_distribute_collapses_fragments(spark, tmp_path):

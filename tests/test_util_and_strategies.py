@@ -3,6 +3,7 @@ multi-key-set equality deletes, salting distribution, parallel bins."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -60,6 +61,36 @@ def test_files_with_deletes_strategy(spark, tmp_warehouse):
     res = runner.execute()
     assert res.input_files == 1
     assert t.scan(spark).count() == 4000 - n_del
+
+
+def test_files_with_deletes_counts_eq_deletes_by_key_bounds(spark, tmp_warehouse):
+    """An equality-delete file counts against a data file only when the
+    rule scans use attaches it: newer sequence AND overlapping key
+    bounds. Its bounds overlap one data file and miss the other, so
+    only the overlapping file is planned."""
+    from iceberg_compaction_spark.sources.table import Table
+
+    t = Table.create(os.path.join(tmp_warehouse, "fweq"), "k bigint, v string")
+    for lo in (0, 1000):
+        t.append_dataframe(
+            spark.range(lo, lo + 100).selectExpr("id as k", "cast(id as string) as v").coalesce(1)
+        )
+    low, high = sorted(t.files(content="data"), key=lambda r: r["path"])
+    if json.loads(low["stats_json"])["k"]["min"] != 0:
+        low, high = high, low
+    t.add_equality_deletes(spark.range(10, 21).selectExpr("id as k").coalesce(1), keys=["k"])
+
+    cfg = CompactionConfig(
+        selection=SelectionStrategy.FILES_WITH_DELETES,
+        min_delete_count=1,
+        sort_order=(("k", False),),
+    )
+    runner = CompactionRunner(spark, t, cfg)
+    assert {p for b in runner.plan() for p in b.paths} == {low["path"]}
+    res = runner.execute()
+    assert res.input_files == 1
+    assert high["path"] in {r["path"] for r in t.files(content="data")}
+    assert t.scan(spark).count() == 200 - 11
 
 
 def test_multi_keyset_equality_deletes(spark, tmp_warehouse):
@@ -167,26 +198,3 @@ def test_metrics_counters_move(spark, tmp_warehouse):
         assert moved(key), key
     text = GLOBAL.prometheus_text()
     assert "# TYPE commit_success counter" in text
-
-
-def test_objectstore_config_plumbing(spark):
-    """S5: configure_s3a lands the Hadoop S3A settings on the session
-    (the sandbox has no object store; the engine is path-agnostic, so
-    config plumbing is the testable surface)."""
-    from iceberg_compaction_spark.sources.objectstore import configure_s3a
-
-    configure_s3a(
-        spark,
-        access_key="ak",
-        secret_key="sk",
-        endpoint="http://localhost:9000",
-        region="us-east-1",
-        path_style_access=True,
-    )
-    hc = spark.sparkContext._jsc.hadoopConfiguration()
-    assert hc.get("fs.s3a.access.key") == "ak"
-    assert hc.get("fs.s3a.secret.key") == "sk"
-    assert hc.get("fs.s3a.endpoint") == "http://localhost:9000"
-    assert hc.get("fs.s3a.endpoint.region") == "us-east-1"
-    assert hc.get("fs.s3a.path.style.access") == "true"
-    assert hc.get("fs.s3a.multipart.size") == str(8 << 20)
