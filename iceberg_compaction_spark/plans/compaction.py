@@ -10,26 +10,36 @@ End-to-end restatement of the reference's lifecycle (SURVEY.md §3):
   → atomic commit + conflict validation (CommitCoordinator,
     commit.rs:78-179)
 
-Spark-first shape per bin (SURVEY.md §3.1 restatement)::
+The reference runs each bin as its own worker task. Here the pending
+bins are grouped into WAVES, and each wave is ONE Spark query
+(SURVEY.md §3.1 restatement)::
 
-    read.parquet(bin files) [+ hidden cols]
+    read.parquet(wave files) [+ hidden cols, _bin = bin ordinal]
       → anti-join position deletes → anti-join equality deletes
-      → repartitionByRange(output_parallelism, sort keys)
-      → sortWithinPartitions(sort keys)
-      → write.option(maxRecordsPerFile, target rows).parquet(bin dir)
+      → one bin:   repartitionByRange(output_parallelism, sort keys)
+        many bins: repartition(len(wave), _bin)
+      → sortWithinPartitions(_bin, sort keys)
+      → write.partitionBy(_bin).option(maxRecordsPerFile).parquet(wave dir)
 
-The gRPC task distribution of the reference (§3.2 boundaries #1–#2) is
-replaced by Spark's own scheduler: bins run as jobs against one
-SparkSession (optionally in parallel via driver threads — Spark
-multiplexes concurrent jobs fine). Boundary #3 (commit) remains a
-single-writer driver-side atomic snapshot.
+A bin whose output fits one file joins the current wave (up to
+``max_parallelism`` of them); a bin that writes several files is a wave
+of its own, so a job never writes more output partitions than one bin
+could. Hash partitioning on ``_bin`` keeps each one-file bin in one
+task, hence one file. A Spark query carries a fixed cost (delete
+broadcasts, a shuffle-map stage, a write job) whatever its size, and
+fusing small bins pays it once per wave instead of once per bin. Waves
+run one after another; Spark parallelizes inside each wave, which
+replaces the reference's gRPC task distribution (§3.2 boundaries
+#1–#2). Boundary #3 (commit) remains a single-writer driver-side
+atomic snapshot.
 
-Resumability (C7 + north rule): every finished bin writes one lineage
-row (input files → output files, rows, bytes, timings) as its own
-Parquet file under ``meta/checkpoints/run-<id>/`` — crash-safe at bin
-granularity, and bins never span table partitions, so resume is
-per-partition. Re-running with the same ``run_id`` skips finished bins
-and commits the union.
+Resumability (C7 + north rule): once a wave is written, every bin of it
+writes one lineage row (input files → output files, rows, bytes, the
+wave's timings) as its own Parquet file under
+``meta/checkpoints/run-<id>/`` — crash-safe at wave granularity (one
+bin per wave with ``max_parallelism=1``), and bins never span table
+partitions. Re-running with the same ``run_id`` skips finished bins and
+commits the union.
 """
 
 from __future__ import annotations
@@ -37,7 +47,6 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -83,6 +92,9 @@ _CKPT_SCHEMA = pa.schema(
         ("finished_ms", pa.int64()),
     ]
 )
+
+# a row's bin ordinal within its wave; the write is partitioned by it
+BIN_COL = "_bin"
 
 
 @dataclass
@@ -165,16 +177,12 @@ class CompactionRunner:
         self.config = config
         self._info_cache: dict[str, list] = {}
         # F7 (reference writer.rs:246-254): observed *output* bytes/row
-        # across bins refines rows-per-file for later bins — the input
+        # across waves refines rows-per-file for later waves — the input
         # estimate is wrong exactly when compaction changes compression
-        # (small snappy files → big sorted files). Lock: bins may run on
-        # driver threads.
-        import threading
-
+        # (small snappy files → big sorted files).
         from iceberg_compaction_spark.functions.util import EwmaRowSize
 
         self._row_size = EwmaRowSize()
-        self._row_size_lock = threading.Lock()
 
     # ------------------------------------------------------------------
     def plan(self, snapshot_id: int | None = None) -> list[BinPlan]:
@@ -308,16 +316,19 @@ class CompactionRunner:
 
     # ------------------------------------------------------------------
     def _delete_frames(self, snapshot_id: int, bin_paths: list[str]):
-        """Delete DataFrames relevant to one bin + broadcast hints.
+        """Delete DataFrames relevant to ``bin_paths`` (one wave's data
+        files) + broadcast hints.
 
-        Deletes are SCOPED to the bin's data files before being read
+        Deletes are SCOPED to those data files before being read
         (``plans/delete_scope``, mirroring the reference's per-task
-        attached deletes, file_selection.rs:82-131): a bin only opens
+        attached deletes, file_selection.rs:82-131): a wave only opens
         pos-delete files whose ``_file`` bounds bracket one of its
-        paths and eq-delete files whose seq exceeds the bin's min data
-        seq with key bounds overlapping the bin's — so a one-partition
-        MERGE's delete set is read by that partition's bins only, not
-        by every bin of the table."""
+        paths and eq-delete files whose seq exceeds the wave's min data
+        seq with key bounds overlapping the wave's — so a one-partition
+        MERGE's delete set is read by that partition's waves only, not
+        by every wave of the table. Scoping over a wave's union only
+        adds delete files; the anti-joins still apply each one by its
+        own path, key and sequence terms."""
         man = self.table.manifest(snapshot_id)
         bin_set = set(bin_paths)
         data_rows = [
@@ -365,58 +376,100 @@ class CompactionRunner:
             min(128 << 20, b.total_bytes // max(b.executor_parallelism, 1) + 1),
         )
 
-    def _rewrite_bin(
+    def _waves(self, bins: list[BinPlan]) -> list[list[BinPlan]]:
+        """``bins`` in plan order, grouped into waves: consecutive bins
+        whose output fits one file share a wave of up to
+        ``max_parallelism`` bins; a bin that writes several files is a
+        wave of its own. No wave's write has more output partitions
+        than one bin may have."""
+        waves: list[list[BinPlan]] = []
+        cur: list[BinPlan] = []
+        for b in bins:
+            if b.output_parallelism > 1:
+                if cur:
+                    waves.append(cur)
+                    cur = []
+                waves.append([b])
+                continue
+            cur.append(b)
+            if len(cur) >= self.config.max_parallelism:
+                waves.append(cur)
+                cur = []
+        if cur:
+            waves.append(cur)
+        return waves
+
+    def _rewrite_wave(
         self,
         run_id: str,
         snapshot_id: int,
-        b: BinPlan,
-        seq_by_path: dict,
+        wave: list[BinPlan],
+        seq_all: dict,
         commit_each: bool = False,
-    ) -> dict:
+    ) -> list[dict]:
+        """Rewrite the bins of one wave in one Spark query and return
+        their lineage rows, in wave order.
+
+        Every row is tagged with ``_bin``, its bin's ordinal in the
+        wave, looked up from its file path (``scan.seq_of_file``, the
+        same plan literal ``_seq`` uses — no join). Each bin's files
+        land under their own ``_bin=<i>/`` directory, and lineage
+        splits by that prefix. Several one-file bins are
+        hash-partitioned on ``_bin``, not range-partitioned: sampled
+        range bounds fall inside bins and would cut one into two
+        files."""
         cfg = self.config
         t0 = time.time()
-        pos_df, bpos, eq_groups = self._delete_frames(snapshot_id, b.paths)
+        paths = [p for b in wave for p in b.paths]
+        pos_df, bpos, eq_groups = self._delete_frames(snapshot_id, paths)
         # epoch-aware read: rewrites migrate pre-rename files' physical
         # column names to the current schema
         df = self.table.read_data_rows(
             self.spark,
-            [{"path": p, "sequence_number": seq_by_path[p]} for p in b.paths],
-            with_file=pos_df is not None,
+            [{"path": p, "sequence_number": seq_all[p]} for p in paths],
+            with_file=True,
             with_pos=pos_df is not None,
             with_seq=bool(eq_groups),
         )
+        ordinal = {p: i for i, b in enumerate(wave) for p in b.paths}
+        df = df.withColumn(BIN_COL, scan_mod.seq_of_file(ordinal, F.col(FILE_COL)))
         df = apply_deletes(df, pos_df, None, broadcast_pos=bpos)
         for keys, eq_df, small in eq_groups:
             df = apply_deletes(df, None, eq_df, eq_keys=keys, broadcast_eq=small)
 
         phys_cols = [f.name for f in self.table.physical_schema().fields]
-        df = df.select(*phys_cols)
+        df = df.select(*phys_cols, BIN_COL)
 
         sort_cols = [
             F.col(c).desc() if desc else F.col(c).asc() for c, desc in cfg.sort_order
         ]
-        plain_sort = [c for c, _ in cfg.sort_order]
-        if cfg.clustering in ("zorder", "hilbert") and cfg.cluster_columns:
+        cluster = cfg.clustering in ("zorder", "hilbert") and cfg.cluster_columns
+        if cluster:
             df = add_cluster_key(df, list(cfg.cluster_columns), curve=cfg.clustering)
-            df = df.repartitionByRange(b.output_parallelism, CLUSTER_COL).sortWithinPartitions(
-                CLUSTER_COL, *plain_sort
-            ).drop(CLUSTER_COL)
+            range_keys = [F.col(CLUSTER_COL)]
+            sort_cols = [F.col(CLUSTER_COL), *(F.col(c) for c, _ in cfg.sort_order)]
         else:
             # range keys include turn_idx ⇒ hot conversations split
             # across output partitions (explicit skew handling)
-            df = df.repartitionByRange(b.output_parallelism, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
+            range_keys = sort_cols
+        if len(wave) == 1:
+            df = df.repartitionByRange(wave[0].output_parallelism, *range_keys)
+        else:
+            df = df.repartition(len(wave), BIN_COL)
+        df = df.sortWithinPartitions(F.col(BIN_COL), *sort_cols)
+        if cluster:
+            df = df.drop(CLUSTER_COL)
 
         # 1.5× slack: output partitions are already ≈target-sized by
         # output_parallelism; the row cap only splits pathological skew,
         # not the expected partition (which would shed tiny remainders)
-        with self._row_size_lock:
-            avg_row = self._row_size.value
+        avg_row = self._row_size.value
         if avg_row is None:  # no output observed yet: input-size estimate
-            avg_row = b.total_bytes / max(b.record_count, 1)
+            avg_row = sum(b.total_bytes for b in wave) / max(
+                sum(b.record_count for b in wave), 1
+            )
         rows_per_file = int(cfg.records_per_file(avg_row) * 1.5)
-        safe = b.bin.replace("/", "_").replace("#", "_")
+        safe = wave[0].bin.replace("/", "_").replace("#", "_")
         # out_dir is unique PER ATTEMPT (uuid suffix), never reused:
         # in WorkerCommit mode a resumed run re-plans from the current
         # snapshot with an empty checkpoint, so a bin NAME can recur
@@ -427,11 +480,11 @@ class CompactionRunner:
         out_dir = os.path.join(
             self.table.data_dir,
             f"run-{run_id}",
-            f"bin-{safe}-{uuid.uuid4().hex[:8]}",
+            f"wave-{safe}-{uuid.uuid4().hex[:8]}",
         )
         tw = time.time()
         (
-            self.table.bloom_write_options(df.write.mode("error"))
+            self.table.bloom_write_options(df.write.mode("error").partitionBy(BIN_COL))
             .option("maxRecordsPerFile", rows_per_file)
             .parquet(out_dir)
         )
@@ -442,51 +495,54 @@ class CompactionRunner:
         )
         infos = self.table.attach_blooms(infos, self.spark)
         GLOBAL.inc("compaction.stats_s", time.time() - ts_)
+        by_bin: list[list] = [[] for _ in wave]
         for fi in infos:
             fi.partition = Table._partition_of(fi)
-        self._info_cache[b.bin] = infos
-        with self._row_size_lock:
-            self._row_size.update(
-                sum(fi.size_bytes for fi in infos),
-                sum(fi.record_count for fi in infos),
-            )
-        if commit_each:
-            # WorkerCommit (reference task.rs:62-64): the bin's replace
-            # snapshot lands immediately. No expected-parent pin —
-            # sibling bins advance the table concurrently; safety comes
-            # from removed-paths-still-live validation (bins never
-            # share inputs). Commits serialize on the table lock, so
-            # with parallel bins every sibling contends at once — the
-            # retry budget must cover the whole convoy, not the default
-            # single-writer setting.
-            self.table.commit(
-                "replace",
-                added=infos,
-                removed_paths=sorted(b.paths),
-                retries=max(16, cfg.commit_max_retries),
-                backoff_base_s=cfg.commit_backoff_base_s,
-                backoff_cap_s=cfg.commit_backoff_cap_s,
-            )
+            # the writer's directory for ordinal i is ``_bin=<i>``
+            by_bin[int(os.path.basename(os.path.dirname(fi.path)).partition("=")[2])].append(fi)
+        self._row_size.update(
+            sum(fi.size_bytes for fi in infos),
+            sum(fi.record_count for fi in infos),
+        )
+        # every bin reports the wave's rewrite interval (commits excluded)
         t1 = time.time()
-        row = {
-            "run_id": run_id,
-            "snapshot_id": snapshot_id,
-            "bin": b.bin,
-            "partition": b.partition,
-            "status": "done",
-            "input_paths": b.paths,
-            "output_paths": [fi.path for fi in infos],
-            "input_bytes": b.total_bytes,
-            "output_bytes": sum(fi.size_bytes for fi in infos),
-            "input_files": len(b.paths),
-            "output_files": len(infos),
-            "rows_processed": sum(fi.record_count for fi in infos),
-            "execution_time_ms": int((t1 - t0) * 1000),
-            "started_ms": int(t0 * 1000),
-            "finished_ms": int(t1 * 1000),
-        }
-        self._write_checkpoint_row(run_id, row)
-        return row
+        rows = []
+        for b, bin_infos in zip(wave, by_bin):
+            self._info_cache[b.bin] = bin_infos
+            if commit_each:
+                # WorkerCommit (reference task.rs:62-64): each bin's
+                # replace snapshot lands right after its wave is
+                # written, one bin after another. No expected-parent
+                # pin — safety comes from removed-paths-still-live
+                # validation (bins never share inputs).
+                self.table.commit(
+                    "replace",
+                    added=bin_infos,
+                    removed_paths=sorted(b.paths),
+                    retries=cfg.commit_max_retries,
+                    backoff_base_s=cfg.commit_backoff_base_s,
+                    backoff_cap_s=cfg.commit_backoff_cap_s,
+                )
+            row = {
+                "run_id": run_id,
+                "snapshot_id": snapshot_id,
+                "bin": b.bin,
+                "partition": b.partition,
+                "status": "done",
+                "input_paths": b.paths,
+                "output_paths": [fi.path for fi in bin_infos],
+                "input_bytes": b.total_bytes,
+                "output_bytes": sum(fi.size_bytes for fi in bin_infos),
+                "input_files": len(b.paths),
+                "output_files": len(bin_infos),
+                "rows_processed": sum(fi.record_count for fi in bin_infos),
+                "execution_time_ms": int((t1 - t0) * 1000),
+                "started_ms": int(t0 * 1000),
+                "finished_ms": int(t1 * 1000),
+            }
+            self._write_checkpoint_row(run_id, row)
+            rows.append(row)
+        return rows
 
     # ------------------------------------------------------------------
     def _removable_delete_files(self, snapshot_id: int, rewritten: set[str]) -> list[str]:
@@ -552,17 +608,14 @@ class CompactionRunner:
         self,
         run_id: str | None = None,
         snapshot_id: int | None = None,
-        parallel_bins: int | None = None,
     ) -> CompactionResult:
         """Run a full compaction. Re-invoke with the same ``run_id`` to
         resume an interrupted run (finished bins are skipped; outputs
         reused; single commit at the end).
 
-        ``parallel_bins``: concurrent bin rewrites as overlapped Spark
-        jobs on driver threads (guide §2.6 — a bin's output tail leaves
-        most executors idle; the next bin's tasks back-fill them).
-        ``None`` (round 9 default) adapts to min(8, pending bins);
-        pass 1 to force strictly sequential bins."""
+        Pending bins run as waves (``_waves``), one Spark query per
+        wave and one wave after another; Spark parallelizes the bins of
+        a wave as tasks of that query."""
         cfg = self.config
         t0 = time.time()
         run_id = run_id or uuid.uuid4().hex[:12]
@@ -600,34 +653,18 @@ class CompactionRunner:
         pending = [b for b in bins if b.bin not in done]
         rows: list[dict] = list(done.values())
 
-        def run_bin(b: BinPlan) -> dict:
-            # per-file seqs always flow (the epoch-aware read needs
-            # them); ``_seq`` is attached only when equality deletes
-            # apply to the bin
-            seqs = {p: seq_all[p] for p in b.paths}
-            return self._rewrite_bin(run_id, sid, b, seqs, commit_each=worker_mode)
-
-        # One scan-split size for the whole run, set before any bin and
-        # restored after: per-bin session-conf mutation raced when bins
-        # ran on concurrent driver threads (one bin's split size applied
-        # to another's scan) and leaked into later queries. The smallest
-        # per-bin split is safe for every bin — extra map tasks are
-        # cheap; stranded cores are not.
+        # One scan-split size for the whole run, set before the first
+        # wave and restored after, so it never leaks into later
+        # queries. The smallest per-bin split is safe for every bin —
+        # extra map tasks are cheap; stranded cores are not.
         split = min((self._split_bytes(b) for b in pending), default=None)
         conf_key = "spark.sql.files.maxPartitionBytes"
         prev_split = self.spark.conf.get(conf_key, None)
         if split is not None:
             self.spark.conf.set(conf_key, str(split))
-        if parallel_bins is None:
-            parallel_bins = min(8, max(1, len(pending)))
         try:
-            if parallel_bins > 1 and len(pending) > 1:
-                # concurrent Spark jobs on one session — the scheduler
-                # interleaves stages (replaces the reference's worker pool)
-                with ThreadPoolExecutor(max_workers=parallel_bins) as ex:
-                    rows += list(ex.map(run_bin, pending))
-            else:
-                rows += [run_bin(b) for b in pending]
+            for wave in self._waves(pending):
+                rows += self._rewrite_wave(run_id, sid, wave, seq_all, commit_each=worker_mode)
         finally:
             if split is not None:
                 if prev_split is None:

@@ -4,7 +4,8 @@
     per-turn text equality under stable (conv_id, turn_idx) ordering;
 (b) identical live-row counts after delete application (generalizes
     the reference's N−deleted oracle, logical_plan_minio.rs:177-178);
-(c) resume from checkpoint at bin granularity.
+(c) resume from checkpoint at wave granularity (one bin per wave with
+    ``max_parallelism=1``).
 """
 
 from __future__ import annotations
@@ -127,25 +128,27 @@ def test_resume_skips_done_bins(spark, tmp_warehouse, monkeypatch):
     t = create_transcripts_table(
         spark, os.path.join(tmp_warehouse, "c5"), n_turns=20_000, n_convs=100, n_files=32
     )
-    runner = CompactionRunner(spark, t, small_cfg())
+    # one bin per wave, so "crash after the first wave" is "after the
+    # first bin"
+    runner = CompactionRunner(spark, t, small_cfg(max_parallelism=1))
     bins = runner.plan()
     assert len(bins) >= 2
     before = ordered_rows(t.scan(spark))
 
     # crash after the first bin completes
-    orig = CompactionRunner._rewrite_bin
+    orig = CompactionRunner._rewrite_wave
     calls = {"n": 0}
 
-    def crashing(self, run_id, sid, b, seqs, **kw):
+    def crashing(self, run_id, sid, wave, seq_all, **kw):
         if calls["n"] >= 1:
             raise RuntimeError("simulated crash")
         calls["n"] += 1
-        return orig(self, run_id, sid, b, seqs, **kw)
+        return orig(self, run_id, sid, wave, seq_all, **kw)
 
-    monkeypatch.setattr(CompactionRunner, "_rewrite_bin", crashing)
+    monkeypatch.setattr(CompactionRunner, "_rewrite_wave", crashing)
     with pytest.raises(RuntimeError):
         runner.execute(run_id="runA")
-    monkeypatch.setattr(CompactionRunner, "_rewrite_bin", orig)
+    monkeypatch.setattr(CompactionRunner, "_rewrite_wave", orig)
 
     done = runner._load_checkpoint("runA")
     assert len(done) == 1

@@ -1,4 +1,4 @@
-"""Round-2 hardening: crash-safety mid-bin, parallel-bin isolation,
+"""Round-2 hardening: crash-safety mid-bin, wave isolation,
 scale-safe delete writes, exactly-once streaming replay."""
 
 from __future__ import annotations
@@ -55,23 +55,25 @@ def test_crash_mid_bin_write_is_resumable(spark, tmp_warehouse):
     assert ordered_rows(t.scan(spark)) == before
 
 
-def test_parallel_bins_match_sequential_and_conf_restored(spark, tmp_warehouse):
-    """Two bins rewritten on concurrent driver threads produce the same
-    table as a sequential run, and the session's maxPartitionBytes is
-    restored afterwards (the old per-bin conf mutation raced threads and
-    leaked into later queries)."""
+def test_one_wave_matches_bin_per_wave_and_conf_restored(spark, tmp_warehouse):
+    """All bins rewritten as one wave produce the same table as one bin
+    per wave (``max_parallelism=1``), and the session's
+    maxPartitionBytes is restored afterwards (the run sets one split
+    size for every wave; it must not leak into later queries)."""
     key = "spark.sql.files.maxPartitionBytes"
     sentinel = str(96 << 20)
     spark.conf.set(key, sentinel)
     try:
         results = []
-        for name, par in (("seq", 1), ("par", 3)):
+        for name, max_par in (("seq", 1), ("wave", 16)):
             t = create_transcripts_table(
                 spark, os.path.join(tmp_warehouse, name), n_turns=12_000, n_convs=60, n_files=24
             )
-            runner = CompactionRunner(spark, t, small_cfg())
-            assert len(runner.plan()) >= 2
-            res = runner.execute(parallel_bins=par)
+            runner = CompactionRunner(spark, t, small_cfg(max_parallelism=max_par))
+            bins = runner.plan()
+            assert len(bins) >= 2
+            assert len(runner._waves(bins)) == (len(bins) if max_par == 1 else 1)
+            res = runner.execute()
             assert res.bins_executed >= 2
             assert spark.conf.get(key) == sentinel  # restored
             results.append(ordered_rows(t.scan(spark)))
@@ -168,21 +170,24 @@ def test_worker_commit_mode(spark, tmp_warehouse, monkeypatch):
         spark, os.path.join(tmp_warehouse, "wc"), n_turns=12_000, n_convs=60, n_files=24
     )
     before = ordered_rows(t.scan(spark))
-    runner = CompactionRunner(spark, t, small_cfg(commit_mode=CommitMode.WORKER_COMMIT))
+    # (one bin per wave, so the first wave is the first bin)
+    runner = CompactionRunner(
+        spark, t, small_cfg(commit_mode=CommitMode.WORKER_COMMIT, max_parallelism=1)
+    )
     n_bins = len(runner.plan())
-    orig = CompactionRunner._rewrite_bin
+    orig = CompactionRunner._rewrite_wave
     calls = {"n": 0}
 
-    def crashing(self, run_id, sid, b, seqs, commit_each=False):
+    def crashing(self, run_id, sid, wave, seq_all, commit_each=False):
         if calls["n"] >= 1:
             raise RuntimeError("simulated crash")
         calls["n"] += 1
-        return orig(self, run_id, sid, b, seqs, commit_each=commit_each)
+        return orig(self, run_id, sid, wave, seq_all, commit_each=commit_each)
 
-    monkeypatch.setattr(CompactionRunner, "_rewrite_bin", crashing)
+    monkeypatch.setattr(CompactionRunner, "_rewrite_wave", crashing)
     with _pytest.raises(RuntimeError):
         runner.execute(run_id="wrun")
-    monkeypatch.setattr(CompactionRunner, "_rewrite_bin", orig)
+    monkeypatch.setattr(CompactionRunner, "_rewrite_wave", orig)
     assert ordered_rows(t.scan(spark)) == before  # partial run still consistent
 
     res = CompactionRunner(
@@ -192,10 +197,10 @@ def test_worker_commit_mode(spark, tmp_warehouse, monkeypatch):
     assert ordered_rows(t.scan(spark)) == before
 
 
-def test_worker_commit_parallel_bins(spark, tmp_warehouse):
-    """WorkerCommit with concurrent bin threads: every bin's commit
-    lands despite lock convoys, and the table equals the sequential
-    result."""
+def test_worker_commit_wave_of_bins(spark, tmp_warehouse):
+    """WorkerCommit with several bins in one wave: every bin's commit
+    lands as its own snapshot after the wave's write, and the table
+    keeps its rows."""
     from iceberg_compaction_spark.config import CommitMode
 
     t = create_transcripts_table(
@@ -208,7 +213,7 @@ def test_worker_commit_parallel_bins(spark, tmp_warehouse):
     bins = runner.plan()
     assert len(bins) >= 3
     snaps_before = len(t.snapshots())
-    res = runner.execute(parallel_bins=4)
+    res = runner.execute()
     assert res.bins_executed == len(bins)
     assert len(t.snapshots()) - snaps_before >= len(bins)
     assert ordered_rows(t.scan(spark)) == before

@@ -1,5 +1,5 @@
 """Peripheral functions (F3/F7/F8), FILES_WITH_DELETES strategy,
-multi-key-set equality deletes, salting distribution, parallel bins."""
+multi-key-set equality deletes, salting distribution, bin waves."""
 
 from __future__ import annotations
 
@@ -143,7 +143,7 @@ def test_salting_distribution(spark):
     assert cold.filter(F.col(SALT_COL) != 0).count() == 0
 
 
-def test_parallel_bins_execution(spark, tmp_warehouse):
+def test_wave_execution(spark, tmp_warehouse):
     t = create_transcripts_table(
         spark, os.path.join(tmp_warehouse, "pb"), n_turns=20_000, n_convs=100, n_files=32
     )
@@ -155,7 +155,7 @@ def test_parallel_bins_execution(spark, tmp_warehouse):
     )
     runner = CompactionRunner(spark, t, cfg)
     assert len(runner.plan()) >= 2
-    res = runner.execute(parallel_bins=4)
+    res = runner.execute()
     assert res.bins_executed >= 2
     assert t.scan(spark).count() == before
 
@@ -175,7 +175,7 @@ def test_metrics_counters_move(spark, tmp_warehouse):
         spark, os.path.join(tmp_warehouse, "metrics"), n_turns=2_000, n_convs=10,
         n_files=4, partitioned=True,
     )
-    CompactionRunner(
+    res = CompactionRunner(
         spark,
         t,
         CompactionConfig(
@@ -183,6 +183,10 @@ def test_metrics_counters_move(spark, tmp_warehouse):
             min_size_per_partition_bytes=1 << 20,
         ),
     ).execute()
+    # waves write one after another, so summed write time fits in the
+    # run's wall time
+    write_s = GLOBAL.snapshot().get("compaction.write_s", 0) - before.get("compaction.write_s", 0)
+    assert 0 < write_s <= res.wall_s
     ts0 = t.scan(spark).select("ts").orderBy("ts").limit(1).collect()[0][0]
     t.scan(spark, filter=f"ts < TIMESTAMP '{ts0}'").count()
     after = GLOBAL.snapshot()
